@@ -95,8 +95,8 @@ object Similarity {
     * (the cosine analogue of MinHash banding): each vector's `bands ×
     * rowsPerBand` projection signs are split into bands; only pairs
     * colliding in ≥1 band are exact-verified against `threshold`. Sketch is
-    * a map-side pass; the only shuffle is the (band, bandVal) bucket join —
-    * NOT all-pairs.
+    * a map-side pass; candidates come from the (band, bandVal) bucket
+    * aggregation of [[Lsh.bandedPairs]] — NOT all-pairs.
     *
     * The projection planes are Rademacher (±1 per dimension, the published
     * sign-random-projection variant — Achlioptas-style sparse/sign
@@ -176,31 +176,17 @@ object Similarity {
           (b, h, id)
         }
       }
-    }.toDF("band", "bandVal", "vec_id")
+    }.toDF("band", "key", "id")
+      .select(col("band"), col("key"), struct(col("id")).as("member"))
 
-    // Candidate generation as ONE aggregation (same rewrite as the
-    // minhash/simhash banding): group each (band, bandVal) bucket,
-    // emit sorted intra-bucket pairs, dedup across bands — replaces a
-    // sort-merge self-join over a twice-computed sketch. The collected
-    // list holds vec_ids only (8 bytes each); the pair explosion is the
-    // same quadratic the self-join had, now without re-shuffling the
-    // bucket table twice.
-    // pair emission stays in CODEGEN (explode + higher-order filter +
-    // explode), not a Scala closure: the SRP bands are 4-bit values, so
-    // buckets are hot (hundreds of members) and the quadratic pair set
-    // is millions of rows — a per-pair closure + encoder measured SLOWER
-    // than the self-join it replaced (guide §4.1: prefer built-ins on
-    // the hot path), while the codegen'd explode beats both.
-    // Dedup BEFORE the verify: the verify needs two 64-double vectors
-    // per candidate row, so its cost scales with candidate rows —
-    // measured at sf0.1, deduping 2.09M candidate rows to 1.29M unique
-    // pairs first beats verifying the duplicates (post-filter dedup was
-    // ~0.5 s slower).
-    val pairs = buckets
-      .groupBy("band", "bandVal")
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .select(explode(col("ids")).as("vec_a"), col("ids"))
-      .select(col("vec_a"), explode(expr("filter(ids, x -> x > vec_a)")).as("vec_b"))
+    // The SRP bands are 4-bit values, so buckets are hot (hundreds of
+    // members) and the pair set is millions of rows. Dedup BEFORE the
+    // verify: the verify needs two 64-double vectors per candidate row,
+    // so its cost scales with candidate rows — measured at sf0.1,
+    // deduping 2.09M candidate rows to 1.29M unique pairs first beats
+    // verifying the duplicates (post-filter dedup was ~0.5 s slower).
+    val pairs = Lsh.bandedPairs(buckets, SrpBucketCap)
+      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"))
       .distinct()
 
     // Verify path gated by ESTIMATED table size (plan stats, no job —
@@ -217,13 +203,17 @@ object Similarity {
     // joins remain — at planet scale the table cannot be broadcast and
     // the join IS the design.
     if (emb.queryExecution.optimizedPlan.stats.sizeInBytes <= verifyBroadcastBytes) {
-      val lookup = emb.as[(Long, Seq[Double])].collect().map { case (id, v) =>
+      val rows = emb.as[(Long, Seq[Double])].collect()
+      val lookup = rows.map { case (id, v) =>
         val x = v.toArray
         var s = 0.0
         var i = 0
         while (i < x.length) { s += x(i) * x(i); i += 1 }
         (id, (x, math.sqrt(s)))
       }.toMap
+      // a repeated vec_id would otherwise collapse to one vector here
+      require(lookup.size == rows.length,
+        s"embeddingDedupBlocked: vec_id must be unique (${rows.length - lookup.size} repeated)")
       val bc = spark.sparkContext.broadcast(lookup)
       pairs.as[(Long, Long)].mapPartitions { it =>
         val m = bc.value
@@ -288,6 +278,11 @@ object Similarity {
     * at-scale shape where the table cannot be broadcast.
     */
   val VerifyBroadcastBytes: Long = 64L << 20
+
+  /** No SRP bucket is dropped: [[embeddingDedupBlocked]]'s recall
+    * figure assumes every colliding pair is verified.
+    */
+  private val SrpBucketCap = Int.MaxValue
 
   def ivfIndex(embeddings: DataFrame, nCentroids: Int = 0, iterations: Int = 2,
                centroidBroadcastBytes: Long = CentroidBroadcastBytes): IvfIndex = {

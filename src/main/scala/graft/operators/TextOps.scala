@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * oracles, not just frozen goldens. Per-document sketches (minhash,
   * simhash, fingerprints) are computed in a *map* (no explode → no
   * shuffle for the sketch phase); only the LSH band bucketing shuffles,
-  * keyed by (band, band signature).
+  * keyed by (band, band signature). Both sketch dedups hand their bucket
+  * rows to [[Lsh.bandedPairs]] for capped bucketing and pair emission.
   */
 object TextOps {
 
@@ -215,41 +216,15 @@ object TextOps {
 
     // bucket key is the band's minhash slice ITSELF (collision-free and
     // directly comparable in the DuckDB oracle — no band-hash function).
-    // Candidate generation is ONE aggregation: group each (band, sig)
-    // bucket's members and emit intra-bucket pairs from the list — the
-    // previous form paid a bucket-count aggregation + a filter join +
-    // a sort-merge SELF-join (the sketch pass ran three times and the
-    // bucket table shuffled four times); this shuffles the sketch once
-    // (guide §2.4). The skew cap keeps its semantics: buckets larger
-    // than maxBucket (near-identical boilerplate hashing to one band
-    // value) are dropped whole, same recall caveat as simhashDedup,
-    // never triggering at fixture scale — and the cap also bounds the
-    // collected list (≤ maxBucket ids per group). Pair set identical:
-    // all a < b pairs within a bucket, deduplicated across bands.
-    val pairs = sketches.flatMap { s =>
+    // The cap never triggers at fixture scale.
+    val buckets = sketches.flatMap { s =>
       (0 until Bands).iterator.map { b =>
         (b, s.minhashes.slice(b * rows, (b + 1) * rows), s.doc_id)
       }
-    }.toDF("band", "sig", "doc_id")
-      .groupBy("band", "sig")
-      // bounded_collect, not collect_list: a plain collect holds an
-      // over-cap bucket's FULL member list before the size filter can
-      // drop it — unbounded state on exactly the boilerplate-skew
-      // buckets the cap exists for. The bounded form keeps at most
-      // maxBucket+1 elements per group while counting all rows; groups
-      // within the cap carry their complete list, over-cap groups are
-      // dropped by count — identical semantics, bounded memory.
-      .agg(graft.functions.BoundedCollect.bounded_collect(col("doc_id"), maxBucket).as("bc"))
-      .filter(col("bc.n") <= maxBucket)
-      .select(col("bc.vals").as("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val sorted = ids.sorted.toArray
-        for {
-          i <- sorted.indices.iterator
-          j <- ((i + 1) until sorted.length).iterator
-        } yield (sorted(i), sorted(j))
-      }
-      .toDF("doc_a", "doc_b")
+    }.toDF("band", "key", "id")
+      .select(col("band"), col("key"), struct(col("id")).as("member"))
+    val pairs = Lsh.bandedPairs(buckets, maxBucket)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
 
     val texts = documents.select(col("doc_id"), col("text"))
@@ -266,15 +241,9 @@ object TextOps {
 
   /** SimHash near-dup: 64-bit sketches bucketed by 4 16-bit bands (any pair
     * within Hamming distance 3 shares ≥1 band — pigeonhole), then exact
-    * Hamming verification ≤ `maxHamming`.
-    */
-  /** `maxBucket` bounds the quadratic (band, bandVal) self-join: buckets
-    * larger than it (near-constant boilerplate docs hashing to one
-    * simhash band value — the skew case at corpus scale) are dropped from
-    * candidate generation, with the documented recall consequence that
-    * pairs found ONLY through an over-full bucket are missed. The default
-    * never triggers at fixture scale (goldens unchanged) but caps the
-    * worst case at 100× from quadratic to maxBucket² per bucket.
+    * Hamming verification ≤ `maxHamming`. `maxBucket` caps a (band,
+    * bandVal) bucket as in [[Lsh.bandedPairs]]; the default never
+    * triggers at fixture scale.
     */
   def simhashDedup(documents: DataFrame, maxHamming: Int = 3,
                    maxBucket: Int = 10000): DataFrame = {
@@ -284,31 +253,14 @@ object TextOps {
       .map { case (id, t) => (id, simHash(t)) }
       .toDF("doc_id", "simhash")
 
-    // Candidate generation as ONE aggregation (same rewrite as
-    // minhashDedup): collect each (band, bandVal) bucket's (doc_id,
-    // simhash) members, cap-filter the bucket whole (identical skew
-    // semantics — the cap also bounds the collected list), emit sorted
-    // intra-bucket pairs, dedup across bands. Replaces the count-agg +
-    // filter join + sort-merge self-join over a thrice-computed sketch.
-    import org.apache.spark.sql.functions.{collect_list, size}
-    sketches.select(col("doc_id"), col("simhash"),
+    val buckets = sketches.select(
+      struct(col("doc_id").as("id"), col("simhash").as("sim")).as("member"),
       explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), expr(s"(simhash >> ${b * 16}) & 65535").as("bandVal"))): _*)).as("bd"))
-      .select(col("doc_id"), col("simhash"), col("bd.band"), col("bd.bandVal"))
-      .groupBy("band", "bandVal")
-      // bounded_collect: same bounded-state rationale as minhashDedup
-      .agg(graft.functions.BoundedCollect.bounded_collect(
-        struct(col("doc_id"), col("simhash")), maxBucket).as("bc"))
-      .filter(col("bc.n") <= maxBucket)
-      .select(col("bc.vals").as("members")).as[Seq[(Long, Long)]]
-      .flatMap { members =>
-        val sorted = members.sortBy(_._1).toArray
-        for {
-          i <- sorted.indices.iterator
-          j <- ((i + 1) until sorted.length).iterator
-        } yield (sorted(i)._1, sorted(j)._1, sorted(i)._2, sorted(j)._2)
-      }
-      .toDF("doc_a", "doc_b", "sim_a", "sim_b")
+        struct(lit(b).as("band"), expr(s"(simhash >> ${b * 16}) & 65535").as("key"))): _*)).as("bd"))
+      .select(col("bd.band"), col("bd.key"), col("member"))
+    Lsh.bandedPairs(buckets, maxBucket)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        col("a.sim").as("sim_a"), col("b.sim").as("sim_b"))
       .distinct()
       .withColumn("hamming", expr("bit_count(sim_a ^ sim_b)"))
       .filter(col("hamming") <= maxHamming)

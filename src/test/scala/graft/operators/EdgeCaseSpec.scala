@@ -38,13 +38,17 @@ class EdgeCaseSpec extends SparkTestBase {
   test("sketch dedup survives degenerate documents; token-free docs pair trivially") {
     // docs 1 (empty) and 2 (whitespace-only) have zero tokens: both
     // minhash over the single degenerate shingle "" and simhash 0 — they
-    // must collide and verify (jaccard({""},{""}) = 1, hamming 0), not crash
-    val mh = TextOps.minhashDedup(weirdDocs, 0.7)
+    // must collide and verify (jaccard({""},{""}) = 1, hamming 0), not crash.
+    // Doc 7 is repeated: a repeated id must never pair with itself.
+    val docs = weirdDocs.union(Seq.fill(2)((7L, "one repeated document body")).toDF("doc_id", "text"))
+    val mh = TextOps.minhashDedup(docs, 0.7)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(mh.contains((1L, 2L)), s"token-free docs must minhash-pair; got $mh")
-    val sh = TextOps.simhashDedup(weirdDocs, 3)
+    assert(!mh.exists(p => p._1 == p._2), s"minhash self-pair: $mh")
+    val sh = TextOps.simhashDedup(docs, 3)
       .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect()
     assert(sh.exists(r => r._1 == 1L && r._2 == 2L && r._3 == 0))
+    assert(!sh.exists(r => r._1 == r._2), s"simhash self-pair: ${sh.toSeq}")
     // zero vectors: cosine is defined as 0.0 (not a DIVIDE_BY_ZERO crash
     // under ANSI mode, not NaN — which Spark orders ABOVE every number,
     // so a NaN would slip through the >= threshold filter)
@@ -52,6 +56,13 @@ class EdgeCaseSpec extends SparkTestBase {
       Seq((1L, Seq.fill(8)(0.0f)), (2L, Seq.fill(8)(0.0f)), (3L, Seq.tabulate(8)(_.toFloat)))
         .toDF("vec_id", "embedding"), 0.4)
     assert(!blocked.collect().exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
+    // a repeated vec_id fails loudly on the broadcast verify, never
+    // collapsing to one of its vectors
+    val repeated = Seq((4L, Seq.tabulate(8)(_.toFloat)), (4L, Seq.tabulate(8)(i => -i.toFloat)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Similarity.embeddingDedupBlocked(repeated, 0.4, verifyBroadcastBytes = Long.MaxValue))
+    assert(e.getMessage.contains("vec_id must be unique"))
   }
 
   test("cell math at the poles, dateline, and garbage coordinates") {
